@@ -26,7 +26,8 @@ object PyApi {
     SparkEntry.oracleSql.getOrElse(name, "")
 
   /** Smallest-k eigenvalues of a symmetric COO matrix (row, col, value)
-    * via the sharded-basis thick-restart Lanczos; returns (i, eig) rows.
+    * via the sharded Lanczos core at block width 1 with thick restart;
+    * returns (i, eig) rows.
     * pylibraft analog: pylibraft.sparse.linalg.eigsh. */
   def eigsh(coo: DataFrame, n: Long, k: Int, m: Int): DataFrame = {
     val spark = coo.sparkSession

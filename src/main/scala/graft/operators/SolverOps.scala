@@ -263,42 +263,24 @@ object SolverOps {
 
   /** eigsh: k smallest eigenpairs of a sparse symmetric matrix via Lanczos
     * with full reorthogonalization — reference: sparse/solver/lanczos.cuh:35
-    * (lanczos_compute_eigenpairs; detail lanczos_smallest:402). The Spark
-    * shape mirrors SURVEY §3.1: each iteration's SpMV is a broadcast-join of
-    * the COO table against the current basis vector; the m×m tridiagonal
-    * eig is local. Basis vectors live on the driver (n ≤ ~1e6 per vector;
-    * restart-style variants shard them — documented future work).
+    * (lanczos_compute_eigenpairs; detail lanczos_smallest:402). The
+    * driver-local tier: the COO table is collected once and every SpMV, the
+    * basis and the m×m tridiagonal eig stay on the driver — per-iteration
+    * job overhead dominates below ~1e6 nnz, which is the only range
+    * [[eigshSmallestAuto]] sends here. Larger matrices take the sharded
+    * block core ([[eigshSmallestShardedBlock]]).
     */
   def eigshSmallest(coo: DataFrame, n: Int, k: Int, m: Int = 40,
       seed: Long = 3): Seq[Double] = {
-    val spark = coo.sparkSession
-    val edges = coo.select(col("row"), col("col"), col("value")).cache()
-    val nnz = edges.count()
-    // size-based dispatch (the reference's kAuto-style heuristic,
-    // matrix/detail/select_k-inl.cuh:38): per-iteration job overhead
-    // dominates below ~1e6 nnz, so small matrices run the SpMV locally;
-    // large ones use the distributed treeAggregate.
-    val localEdges: Array[(Int, Int, Double)] =
-      if (nnz <= 1000000L)
-        edges.collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
-      else null
+    val localEdges = coo.select(col("row"), col("col"), col("value")).collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
     def spmv(v: Array[Double]): Array[Double] = {
-      if (localEdges != null) {
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < localEdges.length) {
-          val e = localEdges(i); out(e._1) += e._3 * v(e._2); i += 1
-        }
-        out
-      } else {
-        val bv = spark.sparkContext.broadcast(v)
-        val out = edges.rdd.treeAggregate(new Array[Double](n))(
-          seqOp = (a, r) => {
-            a(r.getLong(0).toInt) += r.getDouble(2) * bv.value(r.getLong(1).toInt); a
-          },
-          combOp = (a, b) => { var i = 0; while (i < n) { a(i) += b(i); i += 1 }; a })
-        bv.destroy(); out
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < localEdges.length) {
+        val e = localEdges(i); out(e._1) += e._3 * v(e._2); i += 1
       }
+      out
     }
     val steps = math.min(m, n)
     val q = Array.ofDim[Double](steps + 1, n)
@@ -323,7 +305,6 @@ object SolverOps {
       if (beta(j) < 1e-12) { actual = j + 1; j = steps }
       else { q(j + 1) = w.map(_ / beta(j)); j += 1 }
     }
-    edges.unpersist()
     val t = breeze.linalg.DenseMatrix.zeros[Double](actual, actual)
     for (i <- 0 until actual) {
       t(i, i) = alpha(i)
@@ -335,29 +316,13 @@ object SolverOps {
   /** eigsh with the basis SHARDED across the cluster — the scale-out form
     * of [[eigshSmallest]] for n beyond driver memory; reference:
     * sparse/solver/detail/lanczos.cuh:402 (thick-restart lanczos_smallest).
-    * Layout: the basis V lives as a DataFrame (i, qs ARRAY<DOUBLE>) — row i
-    * holds coordinate i of every basis vector; the driver holds only the
-    * m×m projected matrix H = VᵀAV and per-step coefficient vectors (m
-    * doubles), never an n-vector. Each expansion step is two keyed
-    * distributed jobs: the SpMV (join on col + sum) feeding the first
-    * Gram-Schmidt pass (ONE hash aggregate computes every ⟨q_t, w⟩ as a
-    * per-lane codegen'd sum), then the second pass re-MEASURING
-    * ⟨q_t, w₁⟩ from the subtracted data plus ‖w₁‖² so the residual norm
-    * comes from Pythagoras. The second pass must read the subtracted
-    * vector, not be derived from a driver-held Gram: c₂ ≈ (I−VᵀV)c₁ ≈ 0
-    * only corrects the measurement error in c₁, while the orthogonality
-    * drift CGS2 exists to kill is the CANCELLATION rounding in
-    * fl(w − Vc₁) itself — the Gram shortcut is CGS1 in disguise and
-    * produces ghost eigenvalues (observed: a duplicate zero on the chain
-    * fixture under a plan-order perturbation). Restart compresses the
-    * basis to the l best Ritz vectors (a per-row broadcast matvec) plus
-    * the residual lane, resets H to diag(θ) and continues — the
-    * thick-restart scheme, with the coupling block re-measured exactly by
-    * the full-reorth coefficients.
+    * Runs the sharded core documented at [[eigshSmallestShardedBlock]] at
+    * block width 1; `maxRestarts` bounds the thick-restart cycles run when
+    * the lane budget `m` is spent before the Ritz certificate fires.
     */
   def eigshSmallestSharded(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       maxRestarts: Int = 3, seed: Long = 3): Seq[Double] =
-    eigshShardedCore(coo, n, k, m, maxRestarts, seed)._1
+    eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts)._1
 
   /** [[eigshSmallestSharded]] plus the RITZ VECTORS — the factor output a
     * pipeline consumes (spectral embeddings), not just the spectrum. The
@@ -368,253 +333,99 @@ object SolverOps {
     * DataFrame (i, v ARRAY<DOUBLE> of k coords)). */
   def eigshShardedRitz(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       maxRestarts: Int = 3, seed: Long = 3): (Seq[Double], DataFrame) = {
-    val (vals, basis, ys, dim) = eigshShardedCore(coo, n, k, m, maxRestarts, seed)
-    val vecs = basis.select(col("i"),
-      array(ys.toIndexedSeq.map { y =>
-        graft.functions.ArrayMath.dot(
-          org.apache.spark.sql.functions.slice(col("qs"), lit(1), lit(dim)),
-          typedLit(y.toSeq))
-      }: _*).as("v"))
+    val (vals, basis, ys) = eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts)
+    val vecs = basis.select(col("i"), array(ys.toIndexedSeq.map(y =>
+      graft.functions.ArrayMath.dot(col("qs"), typedLit(y.toSeq))): _*).as("v"))
     (vals, vecs)
   }
 
-  private def eigshShardedCore(coo: DataFrame, n: Long, k: Int, m: Int,
-      maxRestarts: Int, seed: Long): (Seq[Double], DataFrame, Array[Array[Double]], Int) = {
-    import breeze.linalg.{eigSym, DenseMatrix}
-    import graft.functions.{ArrayMath, VectorAgg}
-    val spark = coo.sparkSession
-    // partition count tracks the per-row WORK, not just n (r15, same
-    // cells-per-task model as the block path): each step's jobs do
-    // interpreted lane math over the m-wide basis arrays, so size by
-    // n·m cells / 25k — tiny fixtures still run single-task jobs (the
-    // per-step driver loop is job-latency bound there), compute-bound
-    // n reaches full parallelism 25× earlier (measured on the n=1e5
-    // block fixture: 4 → 25-32 partitions halves the step).
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, n * m / 25000L)).toInt
-    // shuffle width must track n too: the driver loop issues ~2 jobs per
-    // step, and at the default width every 30-row exchange schedules a
-    // full-width task wave — pure scheduler overhead at small n, the right
-    // width at large n. Restored on exit. NOTE: spark.sql.shuffle.partitions
-    // is session-global, so a concurrent query on the SAME SparkSession runs
-    // at this width while the solve is in flight (performance-only skew; the
-    // driver-loop solvers assume the single-threaded session the harness
-    // provides — there is no per-DataFrame equivalent of this knob).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // AQE re-plans every exchange stage-by-stage; at the already-chosen
-    // width that is pure per-step planning latency in a ~steps-long driver
-    // loop (measured ~30% of wall time on the n=30 fixture). Restored on
-    // exit, same session-global caveat as the width knob above.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // every step's plan embeds the step counter as a primitive literal
-    // (element_at(qs, lanes)), so no generated class is ever reused — the
-    // janino compile (~2 stages × ~steps jobs) dominates until the per-row
-    // lane math is tens of millions of rows per step; interpreted execution
-    // of a ≤2M-row job is faster than compiling its codegen. Truly large n
-    // keeps codegen: there the per-row work amortizes the compile.
-    val prevWscg = spark.conf.get("spark.sql.codegen.wholeStage")
-    val prevFactory = spark.conf.get("spark.sql.codegen.factoryMode")
-    if (n <= 2000000L) {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
-    try {
-    // hash-distribute the edge table on the join key ONCE and record the
-    // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
-    // outputOrdering, so every step's edges⋈qj sort-merge join plans ZERO
-    // exchange and ZERO sort on the (nnz-sized) edge side — the per-step
-    // shuffles left are qj (n rows) and the row-keyed partial aggregate.
-    val edges = coo.select(col("row"), col("col"), col("value"))
-      .repartition(parts, col("col")).sortWithinPartitions("col")
-      .localCheckpoint(true)
-    // n+1 cap: when m ≥ n the basis can reach the full space, the residual
-    // vanishes and ONE phase returns the exact spectrum (no restart cycles)
-    val steps = math.min(m, n.toInt + 1)
-    // deterministic hash-gaussian start vector, normalized
-    // basis invariant: hash-partitioned on i (width = parts) and sorted by
-    // i — projections are alias-aware, so qj (i→col) arrives at the edge
-    // join already distributed on the join key, and the basis⋈w0 join needs
-    // no exchange either (w0's aggregate inherits HashPartitioning(row→i)).
-    // Every basis update below is a projection, so the invariant survives
-    // each localCheckpoint (LogicalRDD preserves partitioning + ordering).
-    val raw = spark.range(n).select(col("id").as("i"),
-      RandomOps.normal(col("id"), seed, "lz").as("x"))
-      .repartition(parts, col("i")).sortWithinPartitions("i")
-    val n0 = math.sqrt(raw.agg(sum(col("x") * col("x"))).head().getDouble(0))
-    var basis = raw.select(col("i"), array(col("x") / n0).as("qs")).localCheckpoint(true)
-    var h = DenseMatrix.zeros[Double](steps + 1, steps + 1)
-    var lanes = 1
-    var prevRitz: Option[Seq[Double]] = None
-    var result: Seq[Double] = null
-    // subspace eigenvectors + dimension captured at whichever exit fired,
-    // so Ritz vectors can be materialized as one basis matvec afterwards
-    var vecY: Array[Array[Double]] = null
-    var vecDim = 0
-    var restart = 0
-    while (result == null && restart <= maxRestarts) {
-      var invariant = false
-      while (lanes < steps && !invariant && result == null) {
-        val j = lanes - 1 // expand the newest lane
-        val qj = basis.select(col("i").as("col"), element_at(col("qs"), lanes).as("x"))
-        val w0 = edges.join(qj, Seq("col"))
-          .groupBy(col("row").as("i")).agg(sum(col("value") * col("x")).as("w"))
-        // lazy checkpoint: materialized by the c1 aggregate's job (saves a
-        // dedicated eager-materialization job per step), then reused by the
-        // second CGS pass and the basis update
-        val df = basis.join(w0, Seq("i"), "left")
-          .select(col("i"), col("qs"), coalesce(col("w"), lit(0.0)).as("w"))
-          .localCheckpoint(false)
-        // all ⟨q_t, w⟩ in one aggregate; two Gram-Schmidt passes ("twice is
-        // enough") — a single CGS pass loses orthogonality across restarts
-        // and produces ghost eigenvalues. The second pass ALSO returns ‖w₁‖²
-        // so the residual norm comes from Pythagoras (w₁ = wp + V·c₂ with
-        // wp ⊥ V): one fewer job per step.
-        val c1 = df.agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"))
-          .head().getSeq[Double](0)
-        val w1 = df.select(col("i"), col("qs"),
-          (col("w") - ArrayMath.dot(col("qs"), typedLit(c1))).as("w"))
-        val r2 = w1.agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"),
-          sum(col("w") * col("w")).as("n2")).head()
-        val c2 = r2.getSeq[Double](0)
-        val coefs = c1.zip(c2).map { case (a, b) => a + b }
-        (0 until lanes).foreach { t => h(t, j) = coefs(t); h(j, t) = coefs(t) }
-        val wp = w1.select(col("i"), col("qs"),
-          (col("w") - ArrayMath.dot(col("qs"), typedLit(c2))).as("wp"))
-        val b2 = r2.getDouble(1) - c2.map(x => x * x).sum
-        val beta = math.sqrt(math.max(b2, 0.0))
-        if (beta < 1e-10) invariant = true
-        else {
-          h(j + 1, j) = beta; h(j, j + 1) = beta
-          // lazy: the next step's first aggregate materializes it
-          basis = wp.select(col("i"),
-            concat(col("qs"), array(col("wp") / beta)).as("qs")).localCheckpoint(false)
-          lanes += 1
-          // per-step Ritz residual certificate: for an eigenpair (θ, y) of
-          // the lanes×lanes projected block, ‖A·Vy − θ·Vy‖ = β·|y_last|
-          // (the classic Lanczos bound) — once every wanted pair is under
-          // tol the values are certified and no confirmation phase (or
-          // restart) is needed. Driver-local m×m eig, no cluster work.
-          val dim = lanes - 1
-          if (dim >= k + 2) {
-            val es0 = eigSym(h(0 until dim, 0 until dim).copy)
-            val ord = es0.eigenvalues.toArray.zipWithIndex.sortBy(_._1).take(k)
-            val maxBound = ord.map { case (_, c) =>
-              beta * math.abs(es0.eigenvectors(dim - 1, c)) }.max
-            if (maxBound < 1e-9) {
-              result = ord.map(_._1).toSeq
-              vecY = ord.map { case (_, c) =>
-                (0 until dim).map(t => es0.eigenvectors(t, c)).toArray }.toArray
-              vecDim = dim
-            }
-          }
-        }
-      }
-      // Rayleigh-Ritz over the expanded block (skipped when the per-step
-      // certificate already returned)
-      if (result == null) {
-      val big = lanes - (if (invariant) 0 else 1)
-      val es = eigSym(h(0 until big, 0 until big).copy)
-      val order = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1)
-      val ritz = order.take(k).map(_._1).toSeq
-      val converged = prevRitz.exists(p =>
-        p.zip(ritz).map { case (a, b) => math.abs(a - b) }.max < 1e-9)
-      if (invariant || converged || restart == maxRestarts) {
-        result = ritz
-        vecY = order.take(k).map { case (_, c) =>
-          (0 until big).map(t => es.eigenvectors(t, c)).toArray }.toArray
-        vecDim = big
-      } else {
-        // thick restart: compress to l best Ritz vectors + residual lane
-        prevRitz = Some(ritz)
-        val l = math.min(k + 2, big)
-        val yCols = order.take(l).map(_._2)
-        val newLanes = (yCols.map { c =>
-          val yc = (0 until big).map(t => es.eigenvectors(t, c))
-          ArrayMath.dot(org.apache.spark.sql.functions.slice(
-            col("qs"), lit(1), lit(big)), typedLit(yc))
-        } :+ element_at(col("qs"), lanes)).toIndexedSeq
-        basis = basis.select(col("i"), array(newLanes: _*).as("qs")).localCheckpoint(true)
-        h = DenseMatrix.zeros[Double](steps + 1, steps + 1)
-        order.take(l).zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
-        lanes = l + 1
-        restart += 1
-      }
-      }
-    }
-    (result, basis, vecY, vecDim)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWscg)
-      spark.conf.set("spark.sql.codegen.factoryMode", prevFactory)
-    }
-  }
-
-  /** BLOCK-Lanczos variant of [[eigshSmallestSharded]] — expands a block of
-    * `b` lanes per driver round-trip, so the job-latency-bound driver loop
-    * runs `b`× fewer steps for the same Krylov dimension (the classic block
-    * Lanczos of Golub/Underwood; reference lanczos.cuh is the b=1 form).
-    * Same sharded layout (basis rows hold coordinate i of every lane,
-    * driver holds only the m×m projected matrix) and the same 2-job step:
-    * one SpMV+first-CGS-pass aggregate (b matvecs ride ONE join — the edge
-    * table is touched once per BLOCK, not once per lane), one
-    * second-pass+block-Gram aggregate. CGS2 full reorthogonalization
-    * exactly as the b=1 path (the ghost-eigenvalue lesson); the new block
-    * is intra-orthonormalized by driver-side Cholesky QR of the b×b Gram,
-    * derived from the pass-2 aggregate without a third job
-    * (G(W′) = G(W₁) − C₂ᵀC₂, since W₁ = W′ + V·C₂ with W′ ⊥ V). The
-    * per-step Ritz certificate generalizes: for an eigenpair (θ, y) of the
-    * measured H, ‖A·Vy − θ·Vy‖ = ‖R·y_tail‖ with R the block coupling and
-    * y_tail the last b components. A rank-deficient block Gram means the
-    * Krylov space is exhausted (invariant subspace) — Rayleigh-Ritz is
-    * then exact. Single phase (no thick restart): the block form exists
-    * for the large-n certificate-terminated regime where restarts never
-    * fire; [[eigshSmallestSharded]] remains the restart-capable path.
+  /** BLOCK Lanczos over a SHARDED basis — expands a block of `b` lanes per
+    * driver round-trip, so the job-latency-bound driver loop runs `b`×
+    * fewer steps for the same Krylov dimension (the classic block Lanczos
+    * of Golub/Underwood; reference lanczos.cuh is the b=1 form, which
+    * [[eigshSmallestSharded]] runs through the same core). Restartless:
+    * the block form serves the large-n certificate-terminated regime.
+    *
+    * Layout: the basis V lives as a DataFrame (i, qs ARRAY<DOUBLE>) — row
+    * i holds coordinate i of every lane; the driver holds only the m×m
+    * projected matrix H = VᵀAV and per-step coefficient vectors, never an
+    * n-vector. A step is one action: the SpMV (b matvecs ride ONE join —
+    * the edge table is touched once per BLOCK, not once per lane) feeds
+    * the first Gram-Schmidt pass, then the second pass re-MEASURES the
+    * coefficients from the subtracted data together with the block Gram.
+    * The second pass must read the subtracted vectors, not be derived
+    * from a driver-held Gram: c₂ ≈ (I−VᵀV)c₁ ≈ 0 only corrects the
+    * measurement error in c₁, while the orthogonality drift CGS2 exists
+    * to kill is the CANCELLATION rounding in fl(w − Vc₁) itself — the
+    * Gram shortcut is CGS1 in disguise and produces ghost eigenvalues
+    * (observed: a duplicate zero on the chain fixture under a plan-order
+    * perturbation). The new block is intra-orthonormalized from the b×b
+    * Gram G(W′) = G(W₁) − C₂ᵀC₂ (W₁ = W′ + V·C₂ with W′ ⊥ V), no third
+    * job. For an eigenpair (θ, y) of the measured H the residual is
+    * ‖A·Vy − θ·Vy‖ = ‖R·y_tail‖ with R the block coupling and y_tail the
+    * last b components — the per-step certificate. A rank-deficient block
+    * Gram means the Krylov space is exhausted (invariant subspace) and
+    * Rayleigh-Ritz is then exact.
     */
   def eigshSmallestShardedBlock(coo: DataFrame, n: Long, k: Int, m: Int = 25,
-      seed: Long = 3, b: Int = 2, tol: Double = 1e-9): Seq[Double] = {
+      seed: Long = 3, b: Int = 2, tol: Double = 1e-9): Seq[Double] =
+    eigshBlockCore(coo, n, k, m, seed, b, tol, 0)._1
+
+  /** The one sharded Lanczos implementation (see
+    * [[eigshSmallestShardedBlock]] for the layout and step). Thick restart:
+    * when the lane budget `m` is spent uncertified and restarts remain,
+    * the basis is compressed to the l = min(k+2, lanes) best Ritz vectors
+    * (a per-row broadcast matvec) plus the newest, still unmeasured block,
+    * H is reset to diag(θ), and the coupling of that block is measured
+    * exactly when it is next expanded. Returns the k smallest Ritz values,
+    * the measured basis (i, qs) and the subspace eigenvectors y_c, so
+    * Ritz vectors are one basis matvec. */
+  private def eigshBlockCore(coo: DataFrame, n: Long, k: Int, m: Int, seed: Long,
+      b: Int, tol: Double, maxRestarts: Int): (Seq[Double], DataFrame, Array[Array[Double]]) = {
     import breeze.linalg.{eigSym, norm, DenseMatrix, DenseVector}
     import graft.functions.{ArrayMath, VectorAgg}
     val spark = coo.sparkSession
-    // cells-per-task divisor (r15, VERDICT r14 item 1): the loop's per-row
+    // cells-per-task width (r15, VERDICT r14 item 1): the loop's per-row
     // work is lanes-wide array math (CGS folds + axpy buffers), so the
-    // width heuristic sizes by CELLS (rows × basis width m+b), not rows —
-    // rows/25000 undersized the compute-bound step 8× at n=1e5 (probed:
-    // 4 partitions ≈ 650 ms/step r1, 25-32 partitions ≈ 300-430 ms/step;
-    // 1 partition 2.3× worse, so this is CPU row work, not scheduling).
-    // Still capped at cluster parallelism — not a local-core constant.
-    // Probe knob (SPARK_GRAFT_EIGSH_ROWS_PER_TASK, cells/task) kept so
-    // the trade stays measurable without a rebuild.
-    val cellsPerTask = sys.env.get("SPARK_GRAFT_EIGSH_ROWS_PER_TASK")
-      .map(_.toLong).getOrElse(25000L)
+    // width heuristic sizes by CELLS (rows × basis width m+b) / 25k, not
+    // rows — rows/25000 undersized the compute-bound step 8× at n=1e5
+    // (probed: 4 partitions ≈ 650 ms/step r1, 25-32 partitions ≈ 300-430
+    // ms/step; 1 partition 2.3× worse, so this is CPU row work, not
+    // scheduling). Tiny fixtures still run single-task jobs. Capped at
+    // cluster parallelism — not a local-core constant.
     val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      n * (m + b) / cellsPerTask)).toInt
-    // same knob rationale as eigshShardedCore: width tracks n, AQE off in
-    // the step loop, interpreted execution below the janino crossover
-    val codegenOff = sys.env.get("SPARK_GRAFT_EIGSH_CODEGEN")
-      .map(_ != "1").getOrElse(n <= 2000000L)
-    val codegenKnobs = if (codegenOff) Seq(
+      spark.sparkContext.defaultParallelism.toLong, n * (m + b) / 25000L)).toInt
+    // loop knobs, restored on exit: the shuffle width tracks n (at the
+    // default width every tiny exchange schedules a full-width task wave);
+    // AQE re-planning every exchange is pure per-step latency at an
+    // already-chosen width (~30% of wall time on the n=30 fixture); and
+    // every step's plan embeds its lane indices as literals, so no
+    // generated class is reused — below ~2e6 rows interpreted execution
+    // beats compiling the step's codegen, above it the row work amortizes
+    // the compile. These are session-global confs: a concurrent query on
+    // the same session runs under them while the solve is in flight.
+    val codegenKnobs = if (n <= 2000000L) Seq(
       "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Seq.empty
     graft.GraftSession.withConfs(spark, (Seq(
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ codegenKnobs): _*) {
+      // hash-distribute the edge table on the join key ONCE and record the
+      // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
+      // outputOrdering, so every step's edges⋈qj join plans no exchange and
+      // no sort on the (nnz-sized) edge side. The basis keeps the matching
+      // invariant (hash-partitioned on i, sorted by i): every basis update
+      // is a projection, and projections are alias-aware, so qj (i→col)
+      // arrives at the edge join already distributed on the join key.
       val edges = coo.select(col("row"), col("col"), col("value"))
         .repartition(parts, col("col")).sortWithinPartitions("col")
         .localCheckpoint(true)
       val cap = m // lane budget; space exhaustion is caught by deflation
       // relative floor reveals rank loss inside a healthy block; the
-      // absolute floor (λ = 1e-20 ⇔ remainder norm 1e-10) matches the b=1
-      // path's beta < 1e-10 invariant cutoff, so small-norm matrices keep
-      // their genuinely nonzero remainders instead of deflating to a
-      // falsely-certified start space
+      // absolute floor (λ = 1e-20 ⇔ remainder norm 1e-10) is the invariant
+      // cutoff, so small-norm matrices keep their genuinely nonzero
+      // remainders instead of deflating to a falsely-certified start space
       val rankTol = 1e-14
       val absFloor = 1e-20
       // b deterministic hash-gaussian streams, eigen-orthonormalized (the
@@ -668,8 +479,10 @@ object SolverOps {
       graft.Instrument.inc("eigsh.ms_setup", (System.nanoTime() - tSetup0) / 1000000L)
       val h = DenseMatrix.zeros[Double](cap + b, cap + b)
       var result: Seq[Double] = null
-      var done = false
-      while (!done) {
+      var vecY: Array[Array[Double]] = null
+      var prevRitz: Option[Seq[Double]] = None
+      var restart = 0
+      while (result == null) {
         graft.Instrument.inc("eigsh.block_steps")
         val tStep0 = System.nanoTime()
         // ---- measure the newest block [lanes-curB, lanes) ----
@@ -679,6 +492,8 @@ object SolverOps {
         val wAggs = (0 until curB).map(t => sum(col("value") * col(s"x$t")).as(s"w$t"))
         val w0 = edges.join(qj, Seq("col")).groupBy(col("row").as("i"))
           .agg(wAggs.head, wAggs.tail: _*)
+        // lazy checkpoint: materialized by this step's action, then reused
+        // by the basis update
         val df = basis.join(w0, Seq("i"), "left")
           .select(col("i") +: col("qs") +: (0 until curB).map(t =>
             coalesce(col(s"w$t"), lit(0.0)).as(s"w$t")): _*)
@@ -732,14 +547,19 @@ object SolverOps {
         val gPrime = DenseMatrix.tabulate[Double](curB, curB) { (a, c) =>
           gW1(a, c) - (0 until lanes).map(s => c2(a)(s) * c2(c)(s)).sum }
         val (mMap, rEff, rNew, dropBound) = orthMap(gPrime)
-        // certificate over the fully-measured H[0:lanes]: residual of a
-        // Ritz pair (θ, y) is ‖R_eff·y_tail‖ plus at most √(dropped λ)
-        // per deflated direction — the deflation cut must show up in the
-        // bound, not silently vanish from it
+        // Ritz pairs of the fully-measured H[0:lanes], ascending
+        lazy val es = eigSym(h(0 until lanes, 0 until lanes).copy)
+        lazy val order = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1)
+        def finish(): Unit = {
+          result = order.take(k).map(_._1).toSeq
+          vecY = order.take(k).map { case (_, c) =>
+            (0 until lanes).map(t => es.eigenvectors(t, c)).toArray }
+        }
+        // certificate: residual of a Ritz pair (θ, y) is ‖R_eff·y_tail‖
+        // plus at most √(dropped λ) per deflated direction — the deflation
+        // cut must show up in the bound, not silently vanish from it
         if (lanes >= k + 2 || rNew == 0) {
-          val es = eigSym(h(0 until lanes, 0 until lanes).copy)
-          val ord = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1).take(k)
-          val maxBound = ord.map { case (_, cIdx) =>
+          val maxBound = order.take(k).map { case (_, cIdx) =>
             val yTail = DenseVector((j0 until lanes)
               .map(s => es.eigenvectors(s, cIdx)).toArray)
             val kept = if (rNew == 0) 0.0 else norm(rEff * yTail)
@@ -750,48 +570,57 @@ object SolverOps {
           // its spectral gap may pass a looser tol with a still-certified
           // value (measured on the n=1e5 diag fixture the bound decays
           // ~250× per block step — tol 1e-5 saves 2 of ~9 steps)
-          if (maxBound < tol) { result = ord.map(_._1).toSeq; done = true }
+          if (maxBound < tol) finish()
         }
-        if (!done) {
-          if (rNew == 0 || lanes + rNew > cap) done = true // RR fallback below
+        // deflation-aware expansion: r ≤ curB new orthonormal lanes from
+        // Q_new = (W₁ − V·C₂)·M, derived from the CHECKPOINTED df with
+        // c1/c2 as literals (NOT from w1 — its broadcast-c1 subtree would
+        // re-execute the c1 aggregate when the next step materializes the
+        // basis). Arithmetic order identical to the in-plan form:
+        // (w − dot(qs,c1)) − dot(qs,c2). The w2 columns are ALIASED in
+        // their own projection level (r15): inlined as expressions they
+        // were re-evaluated once per NEW lane (curB·rNew dot folds per row
+        // instead of curB; CollapseProject leaves multi-use non-cheap
+        // aliases alone, so the level survives optimization). NO
+        // checkpoint on the grown basis (r15): it is a cheap projection
+        // over the checkpointed df, so the next step's two consumers
+        // recompute a few dot folds per row instead of paying an n×lanes
+        // serialize + storage churn per step; lineage stays one level.
+        def grow(lead: Column): Unit = {
+          val w2d = df.select(col("i") +: col("qs") +: (0 until curB).map(t =>
+            ((col(s"w$t") - ArrayMath.dot(col("qs"), typedLit(c1(t).toSeq)))
+              - ArrayMath.dot(col("qs"), typedLit(c2(t).toSeq)))
+              .as(s"w2_$t")): _*)
+          val newLanes = (0 until rNew).map(u =>
+            (0 until curB).map(t => col(s"w2_$t") * mMap(t, u)).reduce(_ + _))
+          basis = w2d.select(col("i"), concat(lead, array(newLanes: _*)).as("qs"))
+          curB = rNew
+        }
+        if (result == null) {
+          if (rNew > 0 && lanes + rNew <= cap) { grow(col("qs")); lanes += rNew }
           else {
-            // deflation-aware expansion: r ≤ curB new orthonormal lanes
-            // from Q_new = (W₁ − V·C₂)·M, derived from the CHECKPOINTED
-            // df with c1/c2 as literals (NOT from w1 — its broadcast-c1
-            // subtree would re-execute the c1 aggregate when the next
-            // step materializes the basis). Arithmetic order identical
-            // to the in-plan form: (w − dot(qs,c1)) − dot(qs,c2).
-            // The w2 columns are ALIASED in their own projection level
-            // (r15): inlined as expressions they were re-evaluated once
-            // per NEW lane (curB·rNew dot folds per row instead of curB —
-            // the b=4 path paid 16 where 4 suffice; CollapseProject
-            // leaves multi-use non-cheap aliases alone, so the level
-            // survives optimization). Evaluated once per lane.
-            val w2d = df.select(col("i") +: col("qs") +: (0 until curB).map(t =>
-              ((col(s"w$t") - ArrayMath.dot(col("qs"), typedLit(c1(t).toSeq)))
-                - ArrayMath.dot(col("qs"), typedLit(c2(t).toSeq)))
-                .as(s"w2_$t")): _*)
-            val newLanes = (0 until rNew).map(u =>
-              (0 until curB).map(t => col(s"w2_$t") * mMap(t, u)).reduce(_ + _))
-            // NO checkpoint on the expanded basis (r15): it is a cheap
-            // projection over the CHECKPOINTED df, so next step's two
-            // consumers (qj — column-pruned to just the new lanes — and
-            // the full concat feeding df_{t+1}) recompute ~2·curB dot
-            // folds per row instead of paying an n×lanes serialize +
-            // storage churn per step. Lineage stays one level (df is a
-            // LogicalRDD leaf).
-            basis = w2d.select(col("i"),
-              concat(col("qs"), array(newLanes: _*)).as("qs"))
-            lanes += rNew
-            curB = rNew
+            // budget spent or space exhausted: Rayleigh-Ritz over H, or a
+            // thick restart while Ritz values still move between cycles
+            val ritz = order.take(k).map(_._1).toSeq
+            val converged = prevRitz.exists(p =>
+              p.zip(ritz).map { case (a, c) => math.abs(a - c) }.max < 1e-9)
+            if (rNew == 0 || converged || restart == maxRestarts) finish()
+            else {
+              prevRitz = Some(ritz)
+              val l = math.min(k + 2, lanes)
+              grow(array(order.take(l).toIndexedSeq.map { case (_, c) =>
+                ArrayMath.dot(col("qs"),
+                  typedLit((0 until lanes).map(t => es.eigenvectors(t, c))))
+              }: _*))
+              h := 0.0
+              order.take(l).zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
+              lanes = l + rNew
+              restart += 1
+            }
           }
         }
       }
-      if (result == null) {
-        val es = eigSym(h(0 until lanes, 0 until lanes).copy)
-        result = es.eigenvalues.toArray.sorted.take(k).toSeq
-      }
-      result
+      (result, basis, vecY)
     }
   }
 
@@ -816,12 +645,11 @@ object SolverOps {
     math.min(2, room)
   }
 
-  /** Size-dispatched eigsh entry (the kAuto composition): driver-local
-    * SpMV below ~1e6 nnz (same tier [[eigshSmallest]] already uses),
-    * sharded BLOCK Lanczos above with [[eigshBlockAuto]] width. The
-    * restart-capable single-vector [[eigshSmallestSharded]] remains the
-    * manual escape hatch for spectra the restartless certificate path
-    * can't close. */
+  /** Size-dispatched eigsh entry (the kAuto composition): the
+    * driver-local [[eigshSmallest]] up to ~1e6 nnz, the sharded block core
+    * above with [[eigshBlockAuto]] width and no restarts. Spectra that
+    * need thick restart call [[eigshSmallestSharded]], the same core at
+    * b=1 with `maxRestarts` cycles. */
   def eigshSmallestAuto(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       seed: Long = 3): Seq[Double] = {
     val nnz = coo.count()
@@ -1885,7 +1713,8 @@ object SolverOps {
     // the per-iteration join+aggregates were scheduling 32-task waves with
     // AQE replanning for a fixture-sized state table. LAZY checkpoints:
     // each is materialized by the dot-product aggregate that consumes it
-    // (the eigshShardedCore trick), saving 3 dedicated jobs per iteration.
+    // (as the sharded Lanczos step does), saving 3 dedicated jobs per
+    // iteration.
     graft.GraftSession.withLoopKnobs(spark, math.max(n, und.count())) {
     val deg = und.groupBy(col("u").as("i")).agg(count(lit(1)).as("dg"))
     val bv = (pmod(TextOps.h32(concat_ws(":", col("i"), lit("cg"))),

@@ -421,6 +421,34 @@ class Solver2Spec extends AnyFunSuite {
     }
   }
 
+  test("thick restart recovers a planted spectrum one lane budget cannot reach") {
+    // planted {1, 5, 9} under a 100..196 bulk with m=10: a single cycle of
+    // ten lanes leaves the third pair far off, so only the compress-and-
+    // continue restart path reaches the answer (no other fixture fires it:
+    // each either exhausts the space or certifies inside the budget)
+    val n = 2000L
+    val diag = spark.range(n).select(col("id").as("row"), col("id").as("col"),
+      when(col("id") === 0, 1.0).when(col("id") === 1, 5.0)
+        .when(col("id") === 2, 9.0)
+        .otherwise(pmod(col("id"), lit(97)).cast("double") + 100.0).as("value"))
+    val planted = Seq(1.0, 5.0, 9.0)
+    def maxErr(got: Seq[Double]): Double =
+      got.zip(planted).map { case (g, e) => math.abs(g - e) }.max
+    val restarted = SolverOps.eigshSmallestSharded(diag, n, 3, m = 10, maxRestarts = 3)
+    assert(maxErr(restarted) < 1e-6, s"restarted eigsh $restarted vs $planted")
+    val oneCycle = SolverOps.eigshSmallestSharded(diag, n, 3, m = 10, maxRestarts = 0)
+    assert(maxErr(oneCycle) > 1.0,
+      s"one cycle $oneCycle should miss $planted: the fixture must need a restart")
+    // the restarted Ritz vectors are the planted eigenvectors e₀, e₁, e₂
+    val (_, vecsDf) = SolverOps.eigshShardedRitz(diag, n, 3, m = 10, maxRestarts = 3)
+    val vecs = vecsDf.where(col("i") < 3).collect()
+      .map(r => r.getLong(0).toInt -> r.getSeq[Double](1)).toMap
+    for (q <- 0 until 3) {
+      val v2 = vecs(q)(q) * vecs(q)(q)
+      assert(v2 > 1.0 - 1e-6, s"Ritz vector $q: v_q($q)^2 = $v2")
+    }
+  }
+
   test("sparse two-pass rSVD matches exact SVD on decaying-spectrum COO") {
     val blobs = graft.operators.RandomOps.makeBlobs(spark, 300, 16, 3, 11L)
     val coo = blobs.select(col("id").as("row"),
