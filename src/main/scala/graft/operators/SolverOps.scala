@@ -1,9 +1,12 @@
 package graft.operators
 
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.mllib.linalg.{Vectors => MLVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Dense factorizations & iterative solvers (SURVEY.md §2.8).
@@ -322,22 +325,26 @@ object SolverOps {
     */
   def eigshSmallestSharded(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       maxRestarts: Int = 3, seed: Long = 3): Seq[Double] =
-    eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts)._1
+    eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts)((vals, _, _) => vals)
 
   /** [[eigshSmallestSharded]] plus the RITZ VECTORS — the factor output a
     * pipeline consumes (spectral embeddings), not just the spectrum. The
     * k eigenvectors come out as ONE distributed per-row matvec over the
-    * sharded basis: row i of V_k is ⟨qs_i, y_c⟩ for the m-dim subspace
+    * sharded basis: row i of V_k is ⟨q_i, y_c⟩ for the m-dim subspace
     * eigenvectors y_c (driver-held, m·k doubles) — no n-sized driver
-    * state, same shape as the basis itself. Returns (eigenvalues,
-    * DataFrame (i, v ARRAY<DOUBLE> of k coords)). */
+    * state. The frame is materialized (eager local checkpoint) before the
+    * solve releases its basis, so it depends on no released block.
+    * Returns (eigenvalues, DataFrame (i, v ARRAY<DOUBLE> of k coords)). */
   def eigshShardedRitz(coo: DataFrame, n: Long, k: Int, m: Int = 25,
-      maxRestarts: Int = 3, seed: Long = 3): (Seq[Double], DataFrame) = {
-    val (vals, basis, ys) = eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts)
-    val vecs = basis.select(col("i"), array(ys.toIndexedSeq.map(y =>
-      graft.functions.ArrayMath.dot(col("qs"), typedLit(y.toSeq))): _*).as("v"))
-    (vals, vecs)
-  }
+      maxRestarts: Int = 3, seed: Long = 3): (Seq[Double], DataFrame) =
+    eigshBlockCore(coo, n, k, m, seed, 1, 1e-9, maxRestarts) { (vals, basis, ys) =>
+      import org.apache.spark.sql.types._
+      val rows = basis.flatMap { blk => val v = ys.map(y => combine(blk.lanes, y))
+        blk.ids.indices.iterator.map(r => org.apache.spark.sql.Row(blk.ids(r), v.map(_(r)).toSeq)) }
+      val schema = StructType(Seq(StructField("i", LongType, nullable = false),
+        StructField("v", ArrayType(DoubleType), nullable = false)))
+      (vals, coo.sparkSession.createDataFrame(rows, schema).localCheckpoint(true))
+    }
 
   /** BLOCK Lanczos over a SHARDED basis — expands a block of `b` lanes per
     * driver round-trip, so the job-latency-bound driver loop runs `b`×
@@ -346,13 +353,17 @@ object SolverOps {
     * [[eigshSmallestSharded]] runs through the same core). Restartless:
     * the block form serves the large-n certificate-terminated regime.
     *
-    * Layout: the basis V lives as a DataFrame (i, qs ARRAY<DOUBLE>) — row
-    * i holds coordinate i of every lane; the driver holds only the m×m
-    * projected matrix H = VᵀAV and per-step coefficient vectors, never an
-    * n-vector. A step is one action: the SpMV (b matvecs ride ONE join —
-    * the edge table is touched once per BLOCK, not once per lane) feeds
-    * the first Gram-Schmidt pass, then the second pass re-MEASURES the
-    * coefficients from the subtracted data together with the block Gram.
+    * Layout, built once per solve: the COO table is read once,
+    * hash-partitioned on `col` and packed per partition into primitive
+    * arrays with each edge's basis slot resolved; the basis V is one block
+    * per partition of the same HashPartitioner on `i` (sorted row ids plus
+    * one Array[Double] per lane). The driver holds only the m×m projected
+    * H = VᵀAV and per-step coefficients, never an n-vector. A step plans
+    * no query: one shuffle carries the row-keyed SpMV partials of all b
+    * lanes (the edges are read once per BLOCK, not per lane), one job
+    * measures c₁ = VᵀW, one job c₂ and the b×b Gram of W₁ = W − V·c₁, and
+    * the new block is a narrow per-partition map. Partials merge in a
+    * fixed order, so values are bit-stable from run to run.
     * The second pass must read the subtracted vectors, not be derived
     * from a driver-held Gram: c₂ ≈ (I−VᵀV)c₁ ≈ 0 only corrects the
     * measurement error in c₁, while the orthogonality drift CGS2 exists
@@ -369,113 +380,119 @@ object SolverOps {
     */
   def eigshSmallestShardedBlock(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       seed: Long = 3, b: Int = 2, tol: Double = 1e-9): Seq[Double] =
-    eigshBlockCore(coo, n, k, m, seed, b, tol, 0)._1
+    eigshBlockCore(coo, n, k, m, seed, b, tol, 0)((vals, _, _) => vals)
+
+  /** One partition of the edge table, sorted by (row, slot, value); a
+    * slot indexes the co-located basis block. */
+  private final class EdgeBlock(val rows: Array[Long], val slots: Array[Int],
+      val vals: Array[Double]) extends Serializable
+  /** One partition of the basis: sorted row ids, one array per lane. */
+  private final class LaneBlock(val ids: Array[Long], val lanes: Array[Array[Double]])
+      extends Serializable
+  /** One source partition's SpMV partials for one target partition: one
+    * entry per distinct row, `vals` row-major over the lanes. */
+  private final class Partials(val src: Int, val rows: Array[Long], val vals: Array[Double])
+      extends Serializable
+
+  /** Σ_r x(r)·y(r), a strict left fold. */
+  private def dotLane(x: Array[Double], y: Array[Double]): Double = {
+    var s = 0.0; var r = 0
+    while (r < x.length) { s += x(r) * y(r); r += 1 }
+    s
+  }
+  /** Per row r: Σ_s x(s)(r)·c(off + s), a left fold over the lanes s. */
+  private def combine(x: Array[Array[Double]], c: Array[Double], off: Int = 0): Array[Double] = {
+    val out = new Array[Double](x(0).length); var s = 0
+    while (s < x.length) {
+      val (xs, cs) = (x(s), c(off + s)); var r = 0
+      while (r < out.length) { out(r) += xs(r) * cs; r += 1 }
+      s += 1
+    }
+    out
+  }
+  private def minus(a: Array[Double], d: Array[Double]): Array[Double] =
+    Array.tabulate(a.length)(r => a(r) - d(r))
+  /** Σ of per-partition partials in partition-index order (collect keeps
+    * that order), whichever task finished first. */
+  private def foldParts(ps: Array[Array[Double]]): Array[Double] =
+    ps.reduceLeft((a, p) => Array.tabulate(a.length)(i => a(i) + p(i)))
 
   /** The one sharded Lanczos implementation (see
     * [[eigshSmallestShardedBlock]] for the layout and step). Thick restart:
     * when the lane budget `m` is spent uncertified and restarts remain,
     * the basis is compressed to the l = min(k+2, lanes) best Ritz vectors
-    * (a per-row broadcast matvec) plus the newest, still unmeasured block,
-    * H is reset to diag(θ), and the coupling of that block is measured
-    * exactly when it is next expanded. Returns the k smallest Ritz values,
-    * the measured basis (i, qs) and the subspace eigenvectors y_c, so
-    * Ritz vectors are one basis matvec. */
-  private def eigshBlockCore(coo: DataFrame, n: Long, k: Int, m: Int, seed: Long,
-      b: Int, tol: Double, maxRestarts: Int): (Seq[Double], DataFrame, Array[Array[Double]]) = {
+    * (a per-row matvec) plus the newest, still unmeasured block, H is
+    * reset to diag(θ), and the coupling of that block is measured exactly
+    * when it is next expanded. Hands the k smallest Ritz values, the
+    * measured basis and the subspace eigenvectors y_c to `use`, then
+    * releases every block the solve persisted, also when it throws. */
+  private def eigshBlockCore[T](coo: DataFrame, n: Long, k: Int, m: Int, seed: Long,
+      b: Int, tol: Double, maxRestarts: Int)(
+      use: (Seq[Double], RDD[LaneBlock], Array[Array[Double]]) => T): T = {
     import breeze.linalg.{eigSym, norm, DenseMatrix, DenseVector}
-    import graft.functions.{ArrayMath, VectorAgg}
     val spark = coo.sparkSession
-    // cells-per-task width (r15, VERDICT r14 item 1): the loop's per-row
-    // work is lanes-wide array math (CGS folds + axpy buffers), so the
-    // width heuristic sizes by CELLS (rows × basis width m+b) / 25k, not
-    // rows — rows/25000 undersized the compute-bound step 8× at n=1e5
-    // (probed: 4 partitions ≈ 650 ms/step r1, 25-32 partitions ≈ 300-430
-    // ms/step; 1 partition 2.3× worse, so this is CPU row work, not
-    // scheduling). Tiny fixtures still run single-task jobs. Capped at
-    // cluster parallelism — not a local-core constant.
+    // cells-per-task width: a step's per-row work is lanes-wide (CGS
+    // folds), so the width is sized by cells (rows × basis width m+b) /
+    // 25k, capped at cluster parallelism; tiny fixtures run one task
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, n * (m + b) / 25000L)).toInt
-    // loop knobs, restored on exit: the shuffle width tracks n (at the
-    // default width every tiny exchange schedules a full-width task wave);
-    // AQE re-planning every exchange is pure per-step latency at an
-    // already-chosen width (~30% of wall time on the n=30 fixture); and
-    // every step's plan embeds its lane indices as literals, so no
-    // generated class is reused — below ~2e6 rows interpreted execution
-    // beats compiling the step's codegen, above it the row work amortizes
-    // the compile. These are session-global confs: a concurrent query on
-    // the same session runs under them while the solve is in flight.
-    val codegenKnobs = if (n <= 2000000L) Seq(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Seq.empty
-    graft.GraftSession.withConfs(spark, (Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ codegenKnobs): _*) {
-      // hash-distribute the edge table on the join key ONCE and record the
-      // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
-      // outputOrdering, so every step's edges⋈qj join plans no exchange and
-      // no sort on the (nnz-sized) edge side. The basis keeps the matching
-      // invariant (hash-partitioned on i, sorted by i): every basis update
-      // is a projection, and projections are alias-aware, so qj (i→col)
-      // arrives at the edge join already distributed on the join key.
-      val edges = coo.select(col("row"), col("col"), col("value"))
-        .repartition(parts, col("col")).sortWithinPartitions("col")
-        .localCheckpoint(true)
+    val part = new HashPartitioner(parts)
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def hold[R](r: RDD[R]): RDD[R] = { held += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
       val cap = m // lane budget; space exhaustion is caught by deflation
       // relative floor reveals rank loss inside a healthy block; the
       // absolute floor (λ = 1e-20 ⇔ remainder norm 1e-10) is the invariant
       // cutoff, so small-norm matrices keep their genuinely nonzero
       // remainders instead of deflating to a falsely-certified start space
-      val rankTol = 1e-14
-      val absFloor = 1e-20
-      // b deterministic hash-gaussian streams, eigen-orthonormalized (the
-      // same G = UΛUᵀ → Q = X·U·Λ^{-1/2} map the deflation path uses)
-      val raw0 = spark.range(n).select(col("id").as("i") +:
-          (0 until b).map(t => RandomOps.normal(col("id"), seed, s"blz$t").as(s"x$t")): _*)
-        .repartition(parts, col("i")).sortWithinPartitions("i")
-        .localCheckpoint(true)
-      def gramOf(row: org.apache.spark.sql.Row, off: Int, w: Int): DenseMatrix[Double] = {
-        val pairs = for { a <- 0 until w; c <- a until w } yield (a, c)
-        val g = DenseMatrix.zeros[Double](w, w)
-        pairs.zipWithIndex.foreach { case ((a, c), idx) =>
-          val v = row.getDouble(off + idx); g(a, c) = v; g(c, a) = v }
-        g
-      }
-      /** rank-revealing orthonormalization map: G = UΛUᵀ → columns of
-        * M = U_r·Λ_r^{-1/2} (w×r) with Λ_r the eigenvalues above tol;
-        * also returns R_eff = Λ_r^{1/2}·U_rᵀ (r×w), the block coupling,
-        * and √(max dropped λ) — the residual norm a deflated direction can
-        * still carry, which the certificate must add to its bound. */
-    def orthMap(g: DenseMatrix[Double]):
-          (DenseMatrix[Double], DenseMatrix[Double], Int, Double) = {
+      val (rankTol, absFloor) = (1e-14, 1e-20)
+      /** rank-revealing orthonormalization map: G = UΛUᵀ → the columns of
+        * M = U_r·Λ_r^{-1/2} (w×r, one array per new lane) with Λ_r the
+        * eigenvalues above tol; also returns R_eff = Λ_r^{1/2}·U_rᵀ (r×w),
+        * the block coupling, and √(max dropped λ) — the residual norm a
+        * deflated direction can still carry, which the certificate must
+        * add to its bound. */
+      def orthMap(g: DenseMatrix[Double]):
+          (Array[Array[Double]], DenseMatrix[Double], Int, Double) = {
         val es = eigSym((g + g.t) *:* 0.5)
         val lam = es.eigenvalues
         val cut = math.max(absFloor, rankTol * lam.toArray.max)
-        val keep = (0 until g.rows).filter(i => lam(i) > cut)
-        val r = keep.size
-        val dropped = (0 until g.rows).filterNot(keep.contains)
-          .map(i => math.max(lam(i), 0.0)).foldLeft(0.0)(math.max)
-        val mMap = DenseMatrix.zeros[Double](g.rows, r)
-        val rEff = DenseMatrix.zeros[Double](r, g.rows)
-        keep.zipWithIndex.foreach { case (ei, u) =>
-          val s = math.sqrt(lam(ei))
-          (0 until g.rows).foreach { t =>
-            mMap(t, u) = es.eigenvectors(t, ei) / s
-            rEff(u, t) = es.eigenvectors(t, ei) * s
-          }
-        }
-        (mMap, rEff, r, math.sqrt(dropped))
+        val (keep, drop) = (0 until g.rows).partition(i => lam(i) > cut)
+        val mix = keep.map(e => Array.tabulate(g.rows)(t =>
+          es.eigenvectors(t, e) / math.sqrt(lam(e)))).toArray
+        val rEff = DenseMatrix.tabulate(keep.size, g.rows)((u, t) =>
+          es.eigenvectors(t, keep(u)) * math.sqrt(lam(keep(u))))
+        (mix, rEff, keep.size, math.sqrt(drop.map(i => math.max(lam(i), 0.0)).foldLeft(0.0)(math.max)))
       }
       val tSetup0 = System.nanoTime()
-      val g0Pairs = for { a <- 0 until b; c <- a until b } yield (a, c)
-      val g0Aggs = g0Pairs.map { case (a, c) => sum(col(s"x$a") * col(s"x$c")) }
-      val g0Row = raw0.agg(g0Aggs.head, g0Aggs.tail: _*).head()
-      val (m0, _, b0, _) = orthMap(gramOf(g0Row, 0, b))
-      var basis = raw0.select(col("i"), array((0 until b0).map(u =>
-          (0 until b).map(s => col(s"x$s") * m0(s, u)).reduce(_ + _)): _*).as("qs"))
-        .localCheckpoint(true)
-      var lanes = b0 // total lanes; the newest curB of them are unmeasured
-      var curB = b0
+      // b deterministic hash-gaussian streams, eigen-orthonormalized (the
+      // same G = UΛUᵀ → Q = X·U·Λ^{-1/2} map the deflation path uses)
+      val raw0 = hold(spark.range(n).select(col("id") +: (0 until b).map(t =>
+          RandomOps.normal(col("id"), seed, s"blz$t")): _*).rdd
+        .map(r => (r.getLong(0), Array.tabulate(b)(t => r.getDouble(t + 1))))
+        .partitionBy(part).mapPartitions { it =>
+          val rs = it.toArray.sortBy(_._1)
+          Iterator.single(new LaneBlock(rs.map(_._1), Array.tabulate(b)(t => rs.map(_._2(t)))))
+        })
+      // the edge table, shuffled once: an edge lands with its column's
+      // basis coordinate; sorting by (row, slot, value) fixes the SpMV
+      // fold order whatever order the shuffle delivered
+      val edges = hold(coo.select(col("row").cast("long"), col("col").cast("long"),
+          col("value").cast("double")).rdd
+        .map(r => (r.getLong(1), (r.getLong(0), r.getDouble(2)))).partitionBy(part)
+        .zipPartitions(raw0) { (es, bs) =>
+          val ids = bs.next().ids
+          val kept = es.map { case (c, (r, v)) => (r, java.util.Arrays.binarySearch(ids, c), v) }
+            .filter(_._2 >= 0).toArray
+            .sortBy(e => e)(Ordering.Tuple3(Ordering.Long, Ordering.Int, Ordering.Double.TotalOrdering))
+          Iterator.single(new EdgeBlock(kept.map(_._1), kept.map(_._2), kept.map(_._3)))
+        })
+      val g0 = foldParts(raw0.map(blk =>
+        Array.tabulate(b * b)(p => dotLane(blk.lanes(p / b), blk.lanes(p % b)))).collect())
+      val (mix0, _, b0, _) = orthMap(new DenseMatrix(b, b, g0))
+      var basis: RDD[LaneBlock] = hold(raw0.map(blk =>
+        new LaneBlock(blk.ids, mix0.map(mu => combine(blk.lanes, mu)))))
+      var (lanes, curB) = (b0, b0) // total lanes; the newest curB are unmeasured
       graft.Instrument.inc("eigsh.ms_setup", (System.nanoTime() - tSetup0) / 1000000L)
       val h = DenseMatrix.zeros[Double](cap + b, cap + b)
       var result: Seq[Double] = null
@@ -485,68 +502,65 @@ object SolverOps {
       while (result == null) {
         graft.Instrument.inc("eigsh.block_steps")
         val tStep0 = System.nanoTime()
-        // ---- measure the newest block [lanes-curB, lanes) ----
-        val j0 = lanes - curB
-        val qj = basis.select(col("i").as("col") +:
-          (0 until curB).map(t => element_at(col("qs"), j0 + 1 + t).as(s"x$t")): _*)
-        val wAggs = (0 until curB).map(t => sum(col("value") * col(s"x$t")).as(s"w$t"))
-        val w0 = edges.join(qj, Seq("col")).groupBy(col("row").as("i"))
-          .agg(wAggs.head, wAggs.tail: _*)
-        // lazy checkpoint: materialized by this step's action, then reused
-        // by the basis update
-        val df = basis.join(w0, Seq("i"), "left")
-          .select(col("i") +: col("qs") +: (0 until curB).map(t =>
-            coalesce(col(s"w$t"), lit(0.0)).as(s"w$t")): _*)
-          .localCheckpoint(false)
-        // ONE action per step (r15, VERDICT r14 item 1 — batch r1+r2 into
-        // one job chain): the CGS1 coefficients c1 = Σ qs·w are computed
-        // as a 1-row broadcast subtree and crossJoined back, so the CGS2
-        // pass consumes them WITHOUT a driver round-trip — per step this
-        // drops one action submission + one Catalyst pass (measured
-        // ~100-170 ms/step of the ~400-700 ms step at n=1e5). The per-row
-        // arithmetic is unchanged: w − ArrayDot(qs, c1_t) over the SAME
-        // c1 values, same row order (BroadcastNestedLoopJoin streams the
-        // probe side in place), so partial-aggregate folds are
-        // bit-identical to the two-action form. c1 itself rides back on
-        // the same collected row via first() (every joined row carries
-        // the identical broadcast array).
-        val c1Aggs = (0 until curB).map(t =>
-          VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c1_$t"))
-        val c1Row = df.agg(c1Aggs.head, c1Aggs.tail: _*)
-        val w1 = df.crossJoin(broadcast(c1Row))
-          .select(col("i") +: col("qs") +: (0 until curB).map(t =>
-            (col(s"w$t") - graft.functions.ArrayDot.dot(col("qs"), col(s"c1_$t")))
-              .as(s"w$t")) ++: (0 until curB).map(t => col(s"c1_$t")): _*)
-        val gPairs = for { a <- 0 until curB; c <- a until curB } yield (a, c)
-        val aggs2 = (0 until curB).map(t =>
-          VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c$t")) ++
-          gPairs.map { case (a, c) => sum(col(s"w$a") * col(s"w$c")).as(s"g${a}_$c") } ++
-          (0 until curB).map(t => first(col(s"c1_$t")).as(s"c1f_$t"))
-        // plan-vs-execute attribution (r15): force the action's own
-        // QueryExecution first, so ms_r1_plan isolates driver-side
-        // Catalyst work from the jobs. collect()(0) (not head()) keeps
-        // the forced plan the one the action runs — head() builds a
-        // fresh limit-1 QueryExecution and would re-plan.
-        val r2Ds = w1.agg(aggs2.head, aggs2.tail: _*)
-        r2Ds.queryExecution.executedPlan
-        graft.Instrument.inc("eigsh.ms_r1_plan", (System.nanoTime() - tStep0) / 1000000L)
-        val r2 = r2Ds.collect()(0)
-        graft.Instrument.inc("eigsh.ms_r1", (System.nanoTime() - tStep0) / 1000000L)
-        val nG = gPairs.length
-        val c1 = (0 until curB).map(t => r2.getSeq[Double](curB + nG + t).toArray)
-        val c2 = (0 until curB).map(t => r2.getSeq[Double](t).toArray)
-        (0 until curB).foreach { t =>
-          (0 until lanes).foreach { s =>
-            val v = c1(t)(s) + c2(t)(s)
-            h(s, j0 + t) = v; h(j0 + t, s) = v
+        // measure the newest block [lanes-curB, lanes). SpMV map side: one
+        // partial per distinct row of the partition's edges for all cb
+        // lanes, bucketed by the row's target partition
+        val (j0, cb, q0) = (lanes - curB, curB, basis)
+        val spmv = edges.zipPartitions(q0) { (es, bs) =>
+          val e = es.next(); val q = bs.next().lanes
+          val src = TaskContext.getPartitionId()
+          val rowsOut = Array.fill(parts)(Array.newBuilder[Long])
+          val valsOut = Array.fill(parts)(Array.newBuilder[Double])
+          var i = 0
+          while (i < e.rows.length) {
+            val r = e.rows(i); val acc = new Array[Double](cb)
+            while (i < e.rows.length && e.rows(i) == r) {
+              var t = 0; while (t < cb) { acc(t) += e.vals(i) * q(j0 + t)(e.slots(i)); t += 1 }
+              i += 1
+            }
+            val tp = part.getPartition(r)
+            rowsOut(tp) += r; valsOut(tp) ++= acc
           }
+          (0 until parts).iterator.map(tp => (tp, new Partials(src,
+            rowsOut(tp).result(), valsOut(tp).result()))).filter(_._2.rows.nonEmpty)
+        }
+        // reduce side: W = A·V_new per basis row, partials added in
+        // source-partition order; rows without edges stay 0
+        val w = hold(spmv.partitionBy(part).zipPartitions(q0) { (ps, bs) =>
+          val ids = bs.next().ids
+          val wb = Array.fill(cb)(new Array[Double](ids.length))
+          for (p <- ps.map(_._2).toArray.sortBy(_.src); i <- p.rows.indices) {
+            val s = java.util.Arrays.binarySearch(ids, p.rows(i))
+            if (s >= 0) { var t = 0; while (t < cb) { wb(t)(s) += p.vals(i * cb + t); t += 1 } }
+          }
+          Iterator.single(wb)
+        })
+        // c1(t·lanes + s) = ⟨q_s, w_t⟩
+        val c1 = foldParts(q0.zipPartitions(w) { (bs, ws) =>
+          val q = bs.next().lanes; val wb = ws.next(); val l = q.length
+          Iterator.single(Array.tabulate(cb * l)(p => dotLane(q(p % l), wb(p / l))))
+        }.collect())
+        // this step's basis and W are now materialized: release the rest
+        held.filterNot(r => (r eq edges) || (r eq q0) || (r eq w)).foreach { r =>
+          r.unpersist(blocking = true); held -= r }
+        // CGS2: c2 re-measured from W₁ = W − V·c1, plus the Gram of W₁
+        val r2 = foldParts(q0.zipPartitions(w) { (bs, ws) =>
+          val q = bs.next().lanes; val wb = ws.next(); val l = q.length
+          val w1 = Array.tabulate(cb)(t => minus(wb(t), combine(q, c1, t * l)))
+          Iterator.single(Array.tabulate(cb * l)(p => dotLane(q(p % l), w1(p / l))) ++
+            Array.tabulate(cb * cb)(p => dotLane(w1(p / cb), w1(p % cb))))
+        }.collect())
+        graft.Instrument.inc("eigsh.ms_r1", (System.nanoTime() - tStep0) / 1000000L)
+        for (t <- 0 until cb; s <- 0 until lanes) {
+          val v = c1(t * lanes + s) + r2(t * lanes + s)
+          h(s, j0 + t) = v; h(j0 + t, s) = v
         }
         // Gram of the orthogonalized remainder, derived without a third
         // job: W₁ = W′ + V·C₂ with W′ ⊥ V ⇒ G(W′) = G(W₁) − C₂ᵀC₂
-        val gW1 = gramOf(r2, curB, curB)
-        val gPrime = DenseMatrix.tabulate[Double](curB, curB) { (a, c) =>
-          gW1(a, c) - (0 until lanes).map(s => c2(a)(s) * c2(c)(s)).sum }
-        val (mMap, rEff, rNew, dropBound) = orthMap(gPrime)
+        val gPrime = DenseMatrix.tabulate[Double](cb, cb) { (a, c) =>
+          r2(cb * lanes + a * cb + c) -
+            (0 until lanes).map(s => r2(a * lanes + s) * r2(c * lanes + s)).sum }
+        val (mix, rEff, rNew, dropBound) = orthMap(gPrime)
         // Ritz pairs of the fully-measured H[0:lanes], ascending
         lazy val es = eigSym(h(0 until lanes, 0 until lanes).copy)
         lazy val order = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1)
@@ -572,32 +586,22 @@ object SolverOps {
           // ~250× per block step — tol 1e-5 saves 2 of ~9 steps)
           if (maxBound < tol) finish()
         }
-        // deflation-aware expansion: r ≤ curB new orthonormal lanes from
-        // Q_new = (W₁ − V·C₂)·M, derived from the CHECKPOINTED df with
-        // c1/c2 as literals (NOT from w1 — its broadcast-c1 subtree would
-        // re-execute the c1 aggregate when the next step materializes the
-        // basis). Arithmetic order identical to the in-plan form:
-        // (w − dot(qs,c1)) − dot(qs,c2). The w2 columns are ALIASED in
-        // their own projection level (r15): inlined as expressions they
-        // were re-evaluated once per NEW lane (curB·rNew dot folds per row
-        // instead of curB; CollapseProject leaves multi-use non-cheap
-        // aliases alone, so the level survives optimization). NO
-        // checkpoint on the grown basis (r15): it is a cheap projection
-        // over the checkpointed df, so the next step's two consumers
-        // recompute a few dot folds per row instead of paying an n×lanes
-        // serialize + storage churn per step; lineage stays one level.
-        def grow(lead: Column): Unit = {
-          val w2d = df.select(col("i") +: col("qs") +: (0 until curB).map(t =>
-            ((col(s"w$t") - ArrayMath.dot(col("qs"), typedLit(c1(t).toSeq)))
-              - ArrayMath.dot(col("qs"), typedLit(c2(t).toSeq)))
-              .as(s"w2_$t")): _*)
-          val newLanes = (0 until rNew).map(u =>
-            (0 until curB).map(t => col(s"w2_$t") * mMap(t, u)).reduce(_ + _))
-          basis = w2d.select(col("i"), concat(lead, array(newLanes: _*)).as("qs"))
+        // deflation-aware expansion, a narrow map materialized by the next
+        // step: r ≤ cb new orthonormal lanes Q_new = (W₁ − V·C₂)·M, with
+        // the same arithmetic order as the c2 pass, (w − Vc1) − Vc2, after
+        // the lead lanes (the basis itself, or Ritz vectors on a restart)
+        def grow(ritz: Option[Array[Array[Double]]]): Unit = {
+          basis = hold(q0.zipPartitions(w) { (bs, ws) =>
+            val blk = bs.next(); val q = blk.lanes; val wb = ws.next(); val l = q.length
+            val w2 = Array.tabulate(cb)(t =>
+              minus(minus(wb(t), combine(q, c1, t * l)), combine(q, r2, t * l)))
+            val lead = ritz.fold(q)(_.map(y => combine(q, y)))
+            Iterator.single(new LaneBlock(blk.ids, lead ++ mix.map(mu => combine(w2, mu))))
+          })
           curB = rNew
         }
         if (result == null) {
-          if (rNew > 0 && lanes + rNew <= cap) { grow(col("qs")); lanes += rNew }
+          if (rNew > 0 && lanes + rNew <= cap) { grow(None); lanes += rNew }
           else {
             // budget spent or space exhausted: Rayleigh-Ritz over H, or a
             // thick restart while Ritz values still move between cycles
@@ -608,10 +612,8 @@ object SolverOps {
             else {
               prevRitz = Some(ritz)
               val l = math.min(k + 2, lanes)
-              grow(array(order.take(l).toIndexedSeq.map { case (_, c) =>
-                ArrayMath.dot(col("qs"),
-                  typedLit((0 until lanes).map(t => es.eigenvectors(t, c))))
-              }: _*))
+              grow(Some(order.take(l).map { case (_, c) =>
+                (0 until lanes).map(t => es.eigenvectors(t, c)).toArray }))
               h := 0.0
               order.take(l).zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
               lanes = l + rNew
@@ -620,23 +622,20 @@ object SolverOps {
           }
         }
       }
-      (result, basis, vecY)
-    }
+      use(result, basis, vecY)
+    } finally held.foreach(_.unpersist(blocking = true))
   }
 
   /** kAuto-style block-width dispatch for the sharded block-Lanczos path
     * (VERDICT r10 item 3; the reference's measured-crossover pattern,
     * matrix/detail/select_k-inl.cuh:38). Pinned by the round-11 FLOOR
-    * measurements (SCALE.md): on the diag fixture the per-cell idle floors
-    * are b1/b2/b4 = 5.78/4.3/5.79 s at n=1e5, 80/61/63 at 1e6, 96/67/74
-    * at 4e6 — so the lever does NOT invert with n (the round-10 "b=4
-    * slower than b=1" reading was suite contention; their floors differ
-    * by 0.01 s): b=2 is floor-best at every probed size. Cost model for
-    * why, and for the regime bounds: a step adds b lanes with 2 exchanges
-    * (latency ∝ L/b) while its re-orth/Gram aggregates move b·n extra
-    * volume per lane (∝ L·b·n) on top of the b-invariant SpMV (∝ L·nnz)
-    * — so width buys latency until b·n rivals nnz + stage cost, and on
-    * everything probed (nnz = n) that point is past b=4. The k/m clamp is
+    * measurements (SCALE.md) of the earlier DataFrame step, NOT re-measured
+    * on the RDD-block step: diag fixture floors b1/b2/b4 = 5.78/4.3/5.79 s
+    * at n=1e5, 80/61/63 at 1e6, 96/67/74 at 4e6 — b=2 best at every size.
+    * Cost model: a step adds b lanes with 2 jobs and one shuffle (latency
+    * ∝ L/b) while its re-orth/Gram folds touch b·n extra cells per lane
+    * (∝ L·b·n) on top of the b-invariant SpMV (∝ L·nnz) — so width buys
+    * latency until b·n rivals nnz + stage cost. The k/m clamp is
     * structural, not measured: the certificate needs fully-measured lanes
     * past k before the cap, so width must fit in the basis room.
     */

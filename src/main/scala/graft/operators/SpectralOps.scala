@@ -98,8 +98,8 @@ object SpectralOps {
     graft.GraftSession.withLoopKnobs(spark, n) {
       val lap = SparseOps.laplacian(symEdges)
       val (_, vecs) = SolverOps.eigshShardedRitz(lap, n, k, m)
+      // already materialized by eigshShardedRitz: a projection, no copy
       val emb = vecs.select(col("i").as("id"), col("v").as("vec"))
-        .localCheckpoint(true)
       val init = ClusterOps.kmeansParallelInit(emb, k)
       val (assigned, _) = ClusterOps.kmeans(emb, k, iters, Some(init))
       val canon = assigned.groupBy(col("cluster")).agg(min(col("id")).as("label"))

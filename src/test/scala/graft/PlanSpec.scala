@@ -131,39 +131,52 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("sharded-Lanczos step plans exactly 2 exchanges (edge/basis invariant holds)") {
-    // eigshBlockCore hash-distributes the checkpointed edge table on the
-    // contraction key and keeps the basis hash-partitioned+sorted on i, so
-    // a step's SpMV-aggregate job must shuffle ONLY at the row-keyed
-    // aggregate and the final single-partition reduce. A third exchange
-    // means alias-aware partitioning propagation broke (e.g. a projection
-    // rewrite hid the alias) and the nnz-sized edge side re-shuffles every
-    // step of the driver loop.
+  test("sharded Lanczos shuffles the nnz-sized edge table once per solve, not once per step") {
+    // eigshBlockCore hash-partitions the edge table on its column once and
+    // keeps the basis blocks under the same partitioner, so a step reads
+    // its edges in place and shuffles only the row-keyed SpMV partials
+    // (one record per source/target partition pair). Over a whole solve
+    // exactly one stage may write nnz shuffle records, and the stages that
+    // write any are that one, the start block and one per step. A second
+    // nnz-sized write means the edge side re-shuffles every step.
+    import org.apache.spark.SparkProbe
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+      SparkListenerStageSubmitted}
     import org.apache.spark.sql.functions._
-    import graft.functions.VectorAgg
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = spark.range(100).select(col("id").as("row"), col("id").as("col"),
-          lit(1.0).as("value"))
-        .repartition(parts, col("col")).sortWithinPartitions("col")
-        .localCheckpoint(true)
-      val basis = spark.range(100).select(col("id").as("i"), array(lit(1.0)).as("qs"))
-        .repartition(parts, col("i")).sortWithinPartitions("i")
-        .localCheckpoint(true)
-      val qj = basis.select(col("i").as("col"), element_at(col("qs"), 1).as("x"))
-      val w0 = edges.join(qj, Seq("col"))
-        .groupBy(col("row").as("i")).agg(sum(col("value") * col("x")).as("w"))
-      val step = basis.join(w0, Seq("i"), "left")
-        .select(col("i"), col("qs"), coalesce(col("w"), lit(0.0)).as("w"))
-        .agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"))
-      val p = step.queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(p).length
-      assert(exchanges == 2, s"expected 2 exchanges in the step plan, got $exchanges:\n$p")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    import graft.operators.SolverOps
+    val (n, width) = (100L, 31) // circulant band: 31 edges per row
+    val coo = spark.range(n * width).select(expr(s"id div $width").as("row"),
+      pmod(expr(s"id div $width") + col("id") % width - width / 2, lit(n)).as("col"),
+      when(col("id") % width === width / 2, 40.0)
+        .otherwise(lit(-1.0) / (abs(col("id") % width - width / 2) + 1)).as("value"))
+    val nnz = n * width
+    val group = "plan-spec-edge-shuffle"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (Option(s.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          mine.add(s.stageInfo.stageId)
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (mine.contains(s.stageInfo.stageId)) written.put(s.stageInfo.stageId,
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    val steps = Instrument.withExclusive {
+      val before = Instrument.snapshot().getOrElse("eigsh.block_steps", 0L)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "edge shuffle count")
+      try SolverOps.eigshSmallestShardedBlock(coo, n, 3, m = 20, b = 2)
+      finally { sc.clearJobGroup(); SparkProbe.drainListeners(sc); sc.removeSparkListener(listener) }
+      Instrument.snapshot().getOrElse("eigsh.block_steps", 0L) - before
+    }
+    import scala.jdk.CollectionConverters._
+    val writes = written.values.asScala.map(_.longValue).filter(_ > 0).toSeq
+    assert(steps > 1, s"the fixture must run several steps, ran $steps")
+    assert(writes.count(_ >= nnz) == 1 && writes.max == nnz,
+      s"expected one nnz-sized ($nnz) shuffle write, got per-stage records $writes")
+    assert(writes.size == steps + 2,
+      s"expected edges + start block + one shuffle per step ($steps): $writes")
   }
 
   test("graph optimize reads the checkpointed edge list — no per-subtree graph rebuild") {

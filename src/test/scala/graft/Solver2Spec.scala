@@ -449,6 +449,87 @@ class Solver2Spec extends AnyFunSuite {
     }
   }
 
+  /** the n=1e5 diagonal fixture of `solver_eigsh_b1`: spectrum {1, 2, 3}
+    * under a bulk of 1000 + id % 17 */
+  private def bigDiag = spark.range(100000L).select(col("id").as("row"), col("id").as("col"),
+    when(col("id") < 3, col("id").cast("double") + 1.0)
+      .otherwise(lit(1000.0) + pmod(col("id"), lit(17)).cast("double")).as("value"))
+  private def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+  /** the 30-node chain Laplacian (both edge directions plus degrees) */
+  private def chain30 = {
+    val e = spark.range(29).select(col("id").as("row"), (col("id") + 1).as("col"),
+      lit(-1.0).as("value"))
+    e.unionByName(e.select(col("col").as("row"), col("row").as("col"), col("value")))
+      .unionByName(spark.range(30).select(col("id").as("row"), col("id").as("col"),
+        when(col("id") === 0 || col("id") === 29, 1.0).otherwise(2.0).as("value")))
+  }
+
+  test("sharded solves are bit-stable from run to run at n=1e5 (b=1 and b=2)") {
+    // every partial merges in a fixed order (SpMV partials by source
+    // partition, c1/c2/Gram partials by partition index), so repeated
+    // solves over four partitions agree to the last bit whichever tasks
+    // finish first
+    def ritz(): (Seq[Double], Seq[(Long, Seq[Long])]) = {
+      val (vals, vecs) = SolverOps.eigshShardedRitz(bigDiag, 100000L, 3)
+      (vals, vecs.collect().map(r => r.getLong(0) -> bits(r.getSeq[Double](1)))
+        .sortBy(_._1).toSeq)
+    }
+    val (v1, x1) = ritz()
+    val (v2, x2) = ritz()
+    assert(bits(v1) == bits(v2), s"b=1 values moved between runs: $v1 vs $v2")
+    assert(x1.size == 100000 && x1 == x2, "b=1 Ritz vectors moved between runs")
+    val b2 = SolverOps.eigshSmallestShardedBlock(bigDiag, 100000L, 3, b = 2)
+    val b2Again = SolverOps.eigshSmallestShardedBlock(bigDiag, 100000L, 3, b = 2)
+    assert(bits(b2) == bits(b2Again), s"b=2 values moved between runs: $b2 vs $b2Again")
+    for (got <- Seq(v1, b2); (g, e) <- got.zip(Seq(1.0, 2.0, 3.0)))
+      assert(math.abs(g - e) < 1e-6, s"$got vs {1, 2, 3}")
+  }
+
+  test("sharded solves release every block they persist, also when they throw") {
+    // the solve persists its edge table, start block and one basis + W per
+    // step; none may outlive it. Compared as "nothing new is left": the
+    // context cleaner may drop older suites' blocks meanwhile
+    import org.apache.spark.SparkProbe
+    val sc = spark.sparkContext
+    def leftBehind(body: => Unit): Unit = {
+      val rdds = sc.getPersistentRDDs.keySet.toSet
+      val blocks = SparkProbe.rddBlocks(sc).toSet
+      body
+      val newRdds = sc.getPersistentRDDs.keySet.toSet -- rdds
+      val newBlocks = SparkProbe.rddBlocks(sc).toSet -- blocks
+      assert(newRdds.isEmpty && newBlocks.isEmpty,
+        s"solve left persisted RDDs $newRdds and blocks $newBlocks behind")
+    }
+    leftBehind(SolverOps.eigshSmallestSharded(chain30, 30, 3, m = 10, maxRestarts = 2))
+    leftBehind(SolverOps.eigshSmallestShardedBlock(chain30, 30, 3, m = 16, b = 2))
+    // a null entry fails the first step's edge shuffle, after the start
+    // block is already persisted
+    val bad = chain30.withColumn("value",
+      when(col("row") === 7 && col("col") === 7, lit(null).cast("double"))
+        .otherwise(col("value")))
+    leftBehind(intercept[Exception](
+      SolverOps.eigshSmallestSharded(bad, 30, 3, m = 10)))
+  }
+
+  test("two sharded solves on two threads of one session equal the serial ones") {
+    // the core sets no session conf, so concurrent solves on one session
+    // neither see each other's settings nor leave any behind
+    val diag = spark.range(2000).select(col("id").as("row"), col("id").as("col"),
+      when(col("id") === 0, 1.0).when(col("id") === 1, 5.0).when(col("id") === 2, 9.0)
+        .otherwise(pmod(col("id"), lit(97)).cast("double") + 100.0).as("value"))
+    val solves: Seq[() => Seq[Double]] = Seq(
+      () => SolverOps.eigshSmallestSharded(chain30, 30, 3, m = 30, maxRestarts = 4),
+      () => SolverOps.eigshSmallestSharded(diag, 2000, 3, m = 10, maxRestarts = 3))
+    val confs = spark.conf.getAll
+    val serial = solves.map(f => bits(f()))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val concurrent = try solves.map(f => pool.submit(
+        new java.util.concurrent.Callable[Seq[Long]] { def call() = bits(f()) }))
+      .map(_.get()) finally pool.shutdown()
+    assert(concurrent == serial, s"concurrent $concurrent vs serial $serial")
+    assert(spark.conf.getAll == confs, "a solve left a session conf changed")
+  }
+
   test("sparse two-pass rSVD matches exact SVD on decaying-spectrum COO") {
     val blobs = graft.operators.RandomOps.makeBlobs(spark, 300, 16, 3, 11L)
     val coo = blobs.select(col("id").as("row"),
